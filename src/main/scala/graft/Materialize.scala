@@ -20,15 +20,20 @@ object Materialize {
 
   /** Effective shuffle parallelism for an EXPLICIT-COUNT repartition that
     * spreads a CPU-bound kernel (the §2.5 AQE-starved-stage fix): under
-    * AQE with `coalescePartitions.initialPartitionNum` set, that override
+    * AQE with partition coalescing on, `coalescePartitions.initialPartitionNum`
     * — not `spark.sql.shuffle.partitions` — is the intended pre-coalesce
-    * parallelism; reading the base knob raw would understate it. One
-    * helper instead of three drifting `.toInt` call sites (ADVICE r19). */
-  def shuffleParallelism(spark: org.apache.spark.sql.SparkSession): Int =
+    * parallelism; reading the base knob raw would understate it. With AQE
+    * or coalescing off Spark ignores that override, and so does this. */
+  def shuffleParallelism(spark: org.apache.spark.sql.SparkSession): Int = {
+    def on(key: String) = spark.conf.get(key).trim.equalsIgnoreCase("true")
+    val coalescing = on("spark.sql.adaptive.enabled") &&
+      on("spark.sql.adaptive.coalescePartitions.enabled")
     spark.conf
       .getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+      .filter(_ => coalescing)
       .flatMap(_.toIntOption).filter(_ > 0)
       .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
 
   val DirConfKey = "spark.graft.checkpoint.dir"
 

@@ -82,12 +82,22 @@ object GameFold {
     /** explodingBombs (game.go:79): keyed by POSITION, like the reference */
     val explodingBombs = mutable.LinkedHashMap.empty[(Int, Int), String]
 
-    // grid state is array-backed: the flame recompute runs over ALL
-    // exploding bombs on EVERY explode/undo (reference semantics,
-    // event.go:152-163), so the inner loops must be primitive stores, not
-    // hash-map puts. 0 = empty, 1 = destructible, 2 = indestructible.
+    // grid state is array-backed: explodes/undos walk bomb rays cell by
+    // cell, so the inner loops must be primitive stores, not hash-map
+    // puts. 0 = empty, 1 = destructible, 2 = indestructible.
     private val obstacleGrid = new Array[Byte](Width * Height)
-    private val flameGrid = new Array[String](Width * Height)
+    /** Flame coverage, maintained incrementally: per cell, the number of
+      * ray visits by exploding bombs (a bomb's own cell counts twice), so
+      * flameCount is the number of cells with a nonzero count. Valid for
+      * the indestructible layout in [[rayGrid]] — the one the reference's
+      * last full recompute (event.go:152-163) would have used. */
+    private val coverage = new Array[Int](Width * Height)
+    /** Snapshot of obstacleGrid's indestructible cells (2, else 0) as of
+      * the last rebuild: the only obstacles that block rays. */
+    private val rayGrid = new Array[Byte](Width * Height)
+    /** The indestructible layout moved away from [[rayGrid]]: the next
+      * explode/undo rebuilds coverage from scratch. */
+    private var stale = false
     /** Out-of-grid obstacle codes: the reference's genObstacleMapFromList
       * has NO bounds check (event.go:227-251), so an out-of-range code
       * stays in its obstacleMap — counted, and blocking SetBomb at that
@@ -119,11 +129,18 @@ object GameFold {
       m ++= outObstacles
       m
     }
+    /** Cell -> owning bomb name: the last bomb, in [[explodingBombs]]
+      * order, whose rays reach the cell. Derived on demand; only tests
+      * read it. */
     def flames: collection.Map[(Int, Int), String] = {
+      val owner = new Array[String](Width * Height)
+      explodingBombs.foreach { case ((bx, by), name) =>
+        rays(bx, by) { c => rayGrid(c) != 2 && { owner(c) = name; true } }
+      }
       val m = mutable.LinkedHashMap.empty[(Int, Int), String]
       var c = 0
-      while (c < flameGrid.length) {
-        if (flameGrid(c) != null) m((c % Width, c / Width)) = flameGrid(c)
+      while (c < owner.length) {
+        if (owner(c) != null) m((c % Width, c / Width)) = owner(c)
         c += 1
       }
       m
@@ -149,6 +166,13 @@ object GameFold {
           }
           outObstacles(pos) = code < 0
           if (code < 0) destrCount += 1 else indestrCount += 1
+        }
+      }
+      if (!stale) {
+        var c = 0
+        while (!stale && c < rayGrid.length) {
+          stale = (obstacleGrid(c) == 2) != (rayGrid(c) == 2)
+          c += 1
         }
       }
     }
@@ -184,24 +208,38 @@ object GameFold {
         }
       }
 
-    /** Flame recompute (event.go:152-163 / 184-193): from ALL currently
-      * exploding bombs against the CURRENT obstacle map; only
-      * indestructibles block.
-      */
-    private def recomputeFlames(): Unit = {
-      java.util.Arrays.fill(flameGrid.asInstanceOf[Array[AnyRef]], null)
-      flameCount = 0
-      explodingBombs.foreach { case ((bx, by), owner) =>
-        rays(bx, by) { c =>
-          if (obstacleGrid(c) == 2) false
-          else {
-            if (flameGrid(c) == null) flameCount += 1
-            flameGrid(c) = owner
-            true
-          }
+    /** Add (+1) or remove (-1) one bomb's rays from the coverage, blocked
+      * by [[rayGrid]]'s indestructibles. */
+    private def cover(bx: Int, by: Int, delta: Int): Unit =
+      rays(bx, by) { c =>
+        rayGrid(c) != 2 && {
+          val was = coverage(c)
+          coverage(c) = was + delta
+          if (was == 0) flameCount += 1 else if (was + delta == 0) flameCount -= 1
+          true
         }
       }
-    }
+
+    /** Flame recompute (event.go:152-163 / 184-193): the reference rebuilds
+      * flames from ALL currently exploding bombs against the CURRENT
+      * obstacle map, where only indestructibles block. Destroy passes clear
+      * only destructibles, so while the indestructible layout still equals
+      * [[rayGrid]] that rebuild equals the old coverage with the rays of
+      * the bomb at `pos` added (delta +1), removed (-1) or, when the set of
+      * exploding positions did not change, neither (0); otherwise coverage
+      * is rebuilt against a fresh snapshot. */
+    private def recomputeFlames(pos: (Int, Int), delta: Int): Unit =
+      if (stale) {
+        java.util.Arrays.fill(coverage, 0)
+        var c = 0
+        while (c < rayGrid.length) {
+          rayGrid(c) = if (obstacleGrid(c) == 2) 2 else 0
+          c += 1
+        }
+        flameCount = 0
+        stale = false
+        explodingBombs.keysIterator.foreach { case (bx, by) => cover(bx, by, 1) }
+      } else if (delta != 0) cover(pos._1, pos._2, delta)
 
     /** removeBomb (game.go:253-260): deletes the name and whatever bomb
       * currently occupies its position (possibly a different bomb).
@@ -247,17 +285,18 @@ object GameFold {
           bombs.get(e.bomb_name).foreach { pos =>
             if (posToBombs.contains(pos)) {
               removeBomb(e.bomb_name)
-              explodingBombs(pos) = e.bomb_name
+              // a re-explode at an exploding position only renames its owner
+              val added = explodingBombs.put(pos, e.bomb_name).isEmpty
               // unguarded like the reference (event.go:141-151): rays() does
               // per-cell inBounds checks, so an out-of-grid bomb position
               // still destroys the in-grid cells its left/up rays reach
               destroyPass(pos._1, pos._2)
-              recomputeFlames()
+              recomputeFlames(pos, if (added) 1 else 0)
             }
           }
         case "UndoExplodeEvent" => // event.go:178-195: keyed by POSITION
-          explodingBombs.remove((e.x, e.y))
-          recomputeFlames()
+          val pos = (e.x, e.y)
+          recomputeFlames(pos, if (explodingBombs.remove(pos).isDefined) -1 else 0)
         case "BombMoveEvent" => // event.go:203-217: no bounds/obstacle guard
           bombs.get(e.bomb_name).foreach { pos =>
             if (posToBombs.contains(pos)) {

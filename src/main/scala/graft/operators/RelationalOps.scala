@@ -925,6 +925,55 @@ object RelationalOps {
         |  WHERE q.p_retailprice <= p.p_retailprice AND q.p_size >= p.p_size
         |    AND (q.p_retailprice < p.p_retailprice OR q.p_size > p.p_size))""".stripMargin))
 
+  // dq_referential's two halves (below): a per-relationship key frame
+  // and the one final aggregate over all of them.
+  // r19: each relationship contributes its TAGGED full-outer key frame
+  // and the four 1-row reductions collapse into ONE final aggregate
+  // over the union, keyed by the relationship tag — partial aggregation
+  // reduces every partition to ≤ 4 rows map-side, so the tag-keyed
+  // shuffle moves a handful of partials at any scale while four
+  // separate final-aggregate stages (and the union of their 1-row
+  // results) disappear from the schedule.
+  // r20 (guide §2.4): the two per-side aggregates + co-keyed full-outer
+  // join become ONE union + groupBy per relationship — the tagged union
+  // shuffles one set of map-side-combined (k, c, p) partials where the
+  // join shape paid two partial exchanges and a sort-merge. NULL keys
+  // need the join's non-matching semantics, not the groupBy's
+  // nulls-group-together: the NULL-key group explodes into a
+  // child-only row (those children are all orphans) and a parent-only
+  // row (those parents all childless), exactly what the full-outer
+  // join produced as two unmatched sides. A zero count maps to NULL so
+  // the downstream conditional aggregate reads unchanged; a NULL-key
+  // side with no rows emits nothing (the join had no such row either).
+  private[graft] def dqKeyed(name: String,
+      child: org.apache.spark.sql.DataFrame, ck: String,
+      parent: org.apache.spark.sql.DataFrame, pk: String) = {
+    val u = child.select(col(ck).as("k"), lit(1L).as("c"), lit(0L).as("p"))
+      .union(parent.select(col(pk).as("k"), lit(0L).as("c"), lit(1L).as("p")))
+    val nn = (n: org.apache.spark.sql.Column) => when(n > 0, n)
+    u.groupBy("k").agg(sum("c").as("cn"), sum("p").as("pn"))
+      .select(explode(when(col("k").isNotNull,
+          array(struct(nn(col("cn")).as("n_c"), nn(col("pn")).as("n_p"))))
+        .otherwise(array(
+          struct(nn(col("cn")).as("n_c"),
+            lit(null).cast("long").as("n_p")),
+          struct(lit(null).cast("long").as("n_c"),
+            nn(col("pn")).as("n_p"))))).as("s"))
+      .filter(col("s.n_c").isNotNull || col("s.n_p").isNotNull)
+      .select(lit(name).as("relationship"),
+        col("s.n_c").as("n_c"), col("s.n_p").as("n_p"))
+  }
+  private[graft] def dqAudit(frames: Seq[org.apache.spark.sql.DataFrame]) =
+    frames.reduce(_ union _)
+      .groupBy("relationship")
+      .agg(
+        sum(coalesce(col("n_c"), lit(0L))).as("n_child"),
+        sum(when(col("n_p").isNull, col("n_c")).otherwise(lit(0L)))
+          .as("n_orphans"),
+        sum(coalesce(col("n_p"), lit(0L))).as("n_parent"),
+        sum(when(col("n_c").isNull, col("n_p")).otherwise(lit(0L)))
+          .as("n_childless"))
+
   /** Q:dq_referential — the warehouse data-quality audit: for each
     * foreign-key relationship, child/parent cardinalities, orphaned
     * children (FK without a parent — 0 on a consistent feed; the alert
@@ -939,50 +988,6 @@ object RelationalOps {
     * audit frame; nothing quadratic, nothing driver-side.
     */
   val dqReferential: GQuery = {
-    // r19: each relationship contributes its TAGGED full-outer key frame
-    // and the four 1-row reductions collapse into ONE final aggregate
-    // over the union, keyed by the relationship tag — partial aggregation
-    // reduces every partition to ≤ 4 rows map-side, so the tag-keyed
-    // shuffle moves a handful of partials at any scale while four
-    // separate final-aggregate stages (and the union of their 1-row
-    // results) disappear from the schedule.
-    // r20 (guide §2.4): the two per-side aggregates + co-keyed full-outer
-    // join become ONE union + groupBy per relationship — the tagged union
-    // shuffles one set of map-side-combined (k, c, p) partials where the
-    // join shape paid two partial exchanges and a sort-merge. NULL keys
-    // need the join's non-matching semantics, not the groupBy's
-    // nulls-group-together: the NULL-key group explodes into a
-    // child-only row (those children are all orphans) and a parent-only
-    // row (those parents all childless), exactly what the full-outer
-    // join produced as two unmatched sides. A zero count maps to NULL so
-    // the downstream conditional aggregate reads unchanged.
-    def keyedDf(name: String,
-        child: org.apache.spark.sql.DataFrame, ck: String,
-        parent: org.apache.spark.sql.DataFrame, pk: String) = {
-      val u = child.select(col(ck).as("k"), lit(1L).as("c"), lit(0L).as("p"))
-        .union(parent.select(col(pk).as("k"), lit(0L).as("c"), lit(1L).as("p")))
-      val nn = (n: org.apache.spark.sql.Column) => when(n > 0, n)
-      u.groupBy("k").agg(sum("c").as("cn"), sum("p").as("pn"))
-        .select(explode(when(col("k").isNotNull,
-            array(struct(nn(col("cn")).as("n_c"), nn(col("pn")).as("n_p"))))
-          .otherwise(array(
-            struct(nn(col("cn")).as("n_c"),
-              lit(null).cast("long").as("n_p")),
-            struct(lit(null).cast("long").as("n_c"),
-              nn(col("pn")).as("n_p"))))).as("s"))
-        .select(lit(name).as("relationship"),
-          col("s.n_c").as("n_c"), col("s.n_p").as("n_p"))
-    }
-    def auditAll(frames: Seq[org.apache.spark.sql.DataFrame]) =
-      frames.reduce(_ union _)
-        .groupBy("relationship")
-        .agg(
-          sum(coalesce(col("n_c"), lit(0L))).as("n_child"),
-          sum(when(col("n_p").isNull, col("n_c")).otherwise(lit(0L)))
-            .as("n_orphans"),
-          sum(coalesce(col("n_p"), lit(0L))).as("n_parent"),
-          sum(when(col("n_c").isNull, col("n_p")).otherwise(lit(0L)))
-            .as("n_childless"))
     def duckAudit(name: String, c: String, ck: String,
         p: String, pk: String) =
       s"""SELECT '$name' AS relationship,
@@ -999,8 +1004,8 @@ object RelationalOps {
       ("orders->customer", "orders", "o_custkey", "customer", "c_custkey"))
     GQuery(
       "dq_referential",
-      (s, d) => auditAll(rels.map { case (name, c, ck, p, pk) =>
-        keyedDf(name, Tables.table(s, d, c), ck, Tables.table(s, d, p), pk)
+      (s, d) => dqAudit(rels.map { case (name, c, ck, p, pk) =>
+        dqKeyed(name, Tables.table(s, d, c), ck, Tables.table(s, d, p), pk)
       }),
       oracle = Some(rels.map { case (name, c, ck, p, pk) =>
         duckAudit(name, c, ck, p, pk)

@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
-import graft.game.{GameEvent, GameFold}
+import graft.game.{GameEvent, GameFold, RoomSummary}
 
 /** ScalaCheck properties (SURVEY §5): cell-code algebra, fold guards as
   * invariants over arbitrary event streams, per-room interleave invariance,
@@ -147,6 +147,127 @@ object GraftProperties extends Properties("graft") {
       // (flameMap recomputed from the remaining exploding bombs,
       // event.go:184-195)
       st.flames.contains((bx - 2, by)) && st.flames.contains((bx, by))
+    }
+
+  // ---- incremental flame coverage vs a from-scratch model ---------------
+
+  /** Test-local naive fold: the reference handlers (event.go:22-225) over
+    * immutable maps, with flames rebuilt from scratch over every exploding
+    * bomb on each explode/undo — the shape the incremental kernel must
+    * reproduce exactly. */
+  private final class NaiveRoom {
+    private var players = Map.empty[String, (Int, Int, Boolean)]
+    private var bombs = Map.empty[String, (Int, Int)]
+    private var posToBombs = Map.empty[(Int, Int), String]
+    private val exploding = scala.collection.mutable.LinkedHashMap.empty[(Int, Int), String]
+    private var obstacles = Map.empty[(Int, Int), Boolean] // value = destructible
+    var flames = Map.empty[(Int, Int), String]
+    private var n = 0L
+    private var last = -1L
+
+    private def inGrid(c: (Int, Int)) = c._1 >= 0 && c._1 < 30 && c._2 >= 0 && c._2 < 25
+    private def rays(p: (Int, Int)): Seq[Seq[(Int, Int)]] = {
+      val (x, y) = p
+      Seq((1 to 6).map(d => (x - d, y)), (0 to 6).map(d => (x + d, y)),
+        (1 to 6).map(d => (x, y - d)), (0 to 6).map(d => (x, y + d)))
+        .map(_.takeWhile(inGrid).takeWhile(c => !obstacles.get(c).contains(false)))
+    }
+
+    def apply(e: GameEvent): Unit = {
+      n += 1
+      last = e.seq
+      val pos = (e.x, e.y)
+      e.event_type match {
+        case "UserMoveEvent" =>
+          if (inGrid(pos) && !obstacles.contains(pos) &&
+              !players.get(e.name).exists(!_._3))
+            players += e.name -> (e.x, e.y, e.alive)
+        case "UserDeadEvent" =>
+          players.get(e.name).foreach(p => players += e.name -> p.copy(_3 = false))
+        case "UserReviveEvent" => players += e.name -> (e.x, e.y, true)
+        case "UserJoinEvent" =>
+          players += e.name -> (e.x, e.y, e.alive)
+          decode(e.list)
+        case "SetBombEvent" =>
+          if (!obstacles.contains(pos)) {
+            bombs += e.bomb_name -> pos
+            posToBombs += pos -> e.bomb_name
+          }
+        case "ExplodeEvent" =>
+          bombs.get(e.bomb_name).filter(posToBombs.contains).foreach { at =>
+            posToBombs -= at
+            bombs -= e.bomb_name
+            exploding(at) = e.bomb_name
+            rays(at).flatten.foreach(c => if (obstacles.get(c).contains(true)) obstacles -= c)
+            rebuild()
+          }
+        case "UndoExplodeEvent" =>
+          exploding -= pos
+          rebuild()
+        case "BombMoveEvent" =>
+          bombs.get(e.bomb_name).filter(posToBombs.contains).foreach { at =>
+            posToBombs = posToBombs - at + (pos -> e.bomb_name)
+            bombs += e.bomb_name -> pos
+          }
+        case "UpdateMapEvent" => decode(e.list)
+        case _ =>
+      }
+    }
+
+    private def decode(list: Seq[Int]): Unit =
+      obstacles = list.map(code => (math.abs(code) - 1, code < 0))
+        .filter(_._1 >= 0)
+        .map { case (cell, destr) => (cell % 30, cell / 30) -> destr }.toMap
+
+    private def rebuild(): Unit =
+      flames = exploding.foldLeft(Map.empty[(Int, Int), String]) {
+        case (m, (at, owner)) => m ++ rays(at).flatten.map(_ -> owner)
+      }
+
+    def summary(room: String): RoomSummary = RoomSummary(room, n,
+      players.size.toLong, players.values.count(_._3).toLong, bombs.size.toLong,
+      flames.size.toLong, obstacles.values.count(identity).toLong,
+      obstacles.values.count(!_).toLong, last)
+  }
+
+  /** A log dense in the cases incremental coverage must get right: bombs
+    * and obstacles crowd a corner (rays overlap and get blocked), a few
+    * hot positions make re-explodes and undos at exploding and empty cells
+    * frequent, positions and obstacle codes stray off the grid, and map
+    * updates reuse a few indestructible layouts under changing
+    * destructibles. */
+  private val flameLog: Gen[List[GameEvent]] = {
+    val coord = (edge: Int) =>
+      Gen.frequency(8 -> Gen.choose(0, 9), 1 -> Gen.oneOf(-1, edge - 1, edge, edge + 1))
+    val anyPos = Gen.zip(coord(30), coord(25))
+    val corner = Gen.zip(Gen.choose(0, 9), Gen.choose(0, 7)).map { case (x, y) => y * 30 + x }
+    val layout = Gen.listOf(Gen.frequency(6 -> corner, 1 -> Gen.choose(750, 760)))
+    for {
+      hot <- Gen.listOfN(4, anyPos)
+      layouts <- Gen.listOfN(3, layout)
+      n <- Gen.choose(0, 80)
+      evs <- Gen.listOfN(n, for {
+        tpe <- Gen.frequency(4 -> "SetBombEvent", 4 -> "ExplodeEvent",
+          3 -> "UndoExplodeEvent", 2 -> "UpdateMapEvent", 1 -> "UserJoinEvent",
+          1 -> "BombMoveEvent", 1 -> "UserMoveEvent", 1 -> "UserDeadEvent")
+        pos <- Gen.frequency(3 -> Gen.oneOf(hot), 1 -> anyPos)
+        bomb <- Gen.oneOf("b1", "b2", "b3")
+        indestr <- Gen.oneOf(layouts)
+        destr <- Gen.listOf(corner)
+      } yield GameEvent("r", 0, tpe, "A", bomb, "", pos._1, pos._2, alive = true,
+        indestr.map(_ + 1) ++ destr.map(c => -(c + 1))))
+    } yield evs.zipWithIndex.map { case (e, i) => e.copy(seq = i.toLong) }
+  }
+
+  property("incremental flames == from-scratch rebuild after every event") =
+    forAll(flameLog) { evs =>
+      val st = new GameFold.RoomState("r")
+      val naive = new NaiveRoom
+      evs.forall { e =>
+        st.apply(e)
+        naive.apply(e)
+        st.summary == naive.summary("r") && st.flames == naive.flames
+      }
     }
 
   // ---- G1 flame geometry ------------------------------------------------

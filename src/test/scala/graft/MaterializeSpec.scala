@@ -31,4 +31,26 @@ class MaterializeSpec extends SparkSuite {
       spark.conf.unset(Materialize.DirConfKey)
     }
   }
+
+  test("shuffleParallelism reads initialPartitionNum only while AQE coalesces") {
+    val keys = Seq("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+      "spark.sql.adaptive.enabled", "spark.sql.adaptive.coalescePartitions.enabled")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    try {
+      assert(Materialize.shuffleParallelism(spark) === base)
+      spark.conf.set(keys(0), (base + 5).toString)
+      spark.conf.set(keys(1), "true")
+      spark.conf.set(keys(2), "true")
+      assert(Materialize.shuffleParallelism(spark) === base + 5)
+      spark.conf.set(keys(2), "false")
+      assert(Materialize.shuffleParallelism(spark) === base)
+      spark.conf.set(keys(2), "true")
+      spark.conf.set(keys(1), "false")
+      assert(Materialize.shuffleParallelism(spark) === base)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
